@@ -338,29 +338,19 @@ final class GraftXGBClassifier extends GraftEstimator[GraftXGBClassifier] {
               StagedEval.history(fitted, d, labelCol, "logloss", evalWeights.get(n)))
           }
       } else {
-        // multiclass history via staged OvR margins (reference
-        // `multi:softprob` evals_result, `core.py:120, 580-590`);
-        // RandomForest has no per-round structure — fail loudly
-        // rather than silently dropping the caller's eval sets
+        // multiclass history via staged per-class margins of the OvR
+        // or softprob forest (reference `multi:softprob` evals_result,
+        // `core.py:120, 580-590`); RandomForest has no per-round
+        // structure — fail loudly rather than silently dropping the
+        // caller's eval sets
         require(multiclassStrategy != "rf",
           "eval-set history needs per-round models (multiclassStrategy=ovr " +
           "or softprob); RandomForest multiclass has no boosting rounds")
-        evalsResult = fitted.model match {
-          case sp: SoftprobBoost.SoftprobModel =>
-            // true softprob: one staged walk of the joint forest
-            evalSets.map { case (name, d) =>
-              val data = GraftBoost.assemble(
-                d.withColumn("label", col(labelCol).cast("double")),
-                featureCols, fitted.imputation)
-              name -> SoftprobBoost.stagedEval(sp, data, evalWeights.get(name))
-            }
-          case _ =>
-            evalSets.map { case (name, d) =>
-              val w = evalWeights.get(name)
-              name -> Map(
-                "mlogloss" -> StagedEval.history(fitted, d, labelCol, "mlogloss", w),
-                "merror"   -> StagedEval.history(fitted, d, labelCol, "merror", w))
-            }
+        evalsResult = evalSets.map { case (name, d) =>
+          val w = evalWeights.get(name)
+          name -> Map(
+            "mlogloss" -> StagedEval.history(fitted, d, labelCol, "mlogloss", w),
+            "merror"   -> StagedEval.history(fitted, d, labelCol, "merror", w))
         }
       }
     }

@@ -9,6 +9,7 @@ import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
 import org.apache.spark.ml.Model
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,9 +65,10 @@ object GraftBoost {
     *                         replaced per `missingStrategy` before
     *                         assembly — a documented divergence from
     *                         XGBoost.
-    * @param multiclassStrategy "ovr" = OneVsRest over binary GBT
-    *                         (closest to multi:softprob boosting);
-    *                         "rf" = RandomForest (single model,
+    * @param multiclassStrategy "softprob" = the single-model
+    *                         multi:softprob forest on the native
+    *                         grower; "ovr" = OneVsRest over binary
+    *                         GBT; "rf" = RandomForest (single model,
     *                         native probabilities; faster at scale)
     * @param seed             determinism anchor
     */
@@ -372,10 +374,20 @@ object GraftBoost {
     * objectives (XGBoost's default eval metric per objective).
     */
   private[ml] def sparseMetricName(objective: String): String = objective match {
-    case "binary:logistic" => "logloss"
-    case "reg:gamma"       => "gamma-deviance"
-    case "reg:tweedie"     => "tweedie-nloglik"
-    case _                 => "rmse"
+    case "binary:logistic"   => "logloss"
+    case "reg:gamma"         => "gamma-deviance"
+    case "reg:tweedie"       => "tweedie-nloglik"
+    case "count:poisson"     => "poisson-deviance"
+    case "reg:quantileerror" => "pinball"
+    case _                   => "rmse"
+  }
+
+  /** Runs `body`, then puts the caller's `spark.job.description` back:
+    * the "boost: …" phase labels set inside never outlive the fit.
+    */
+  private[ml] def keepingJobDescription[T](sc: SparkContext)(body: => T): T = {
+    val caller = sc.getLocalProperty("spark.job.description")
+    try body finally sc.setJobDescription(caller)
   }
 
   /** Single validator shared by BoostParams and the estimator setter
@@ -583,12 +595,7 @@ object GraftBoost {
     val assembled = assemble(df, featureCols, imputation, keepNaN = native)
       .withColumn("label", col(labelCol).cast("double"))
       .select(trainCols: _*)
-    val trainParts = {
-      df.sparkSession.sparkContext.setJobDescription("boost: input count")
-      val n = assembled.count()
-      math.min(df.sparkSession.sparkContext.defaultParallelism.toLong,
-        math.max(1L, n / TrainRowsPerTask)).toInt
-    }
+    val sc = df.sparkSession.sparkContext
     // Materialize the (repartitioned, slim) training frame ONCE before
     // the fit. Without this every pre-round action — the numFeat
     // head(), the proposeEdges quantile pass, the base-score mean, the
@@ -602,11 +609,15 @@ object GraftBoost {
     // training frame across rounds×levels passes is the standard
     // distributed-boosting posture (XGBoost4J-Spark caches its
     // converted input the same way).
-    df.sparkSession.sparkContext.setJobDescription("boost: train materialize")
-    val data =
+    val data = keepingJobDescription(sc) {
+      sc.setJobDescription("boost: input count")
+      val n = assembled.count()
+      val trainParts = math.min(sc.defaultParallelism.toLong,
+        math.max(1L, n / TrainRowsPerTask)).toInt
+      sc.setJobDescription("boost: train materialize")
       (if (trainParts > 1) assembled.repartition(trainParts) else assembled)
         .localCheckpoint()
-    df.sparkSession.sparkContext.setJobDescription(null)
+    }
 
     if (params.booster == "gblinear") {
       require(!native,
@@ -662,17 +673,33 @@ object GraftBoost {
         params.missingStrategy)
     }
 
-    if (native) {
-      // XGBoost's sparsity-aware mechanism — a custom histogram loop
-      // (SparseBoost) since MLlib rejects NaN features outright
+    // the native histogram grower owns every objective MLlib's GBT
+    // lacks; binary/squared error train there only under "native"
+    val softprob = params.objective.startsWith("multi:") &&
+      params.multiclassStrategy == "softprob"
+    if (native || softprob || SparseBoost.NativeOnlyObjectives(params.objective)) {
       require(validationCol.isEmpty,
-        "native sparse boosting records its train history itself; " +
+        "the native tree loop records its train history itself; " +
         "use StagedEval on the returned model for validation metrics")
+      if (softprob) {
+        // the TRUE single-model mechanism (core.py:580-590): K trees
+        // per round on shared multinomial softmax gradients. Class
+        // inference = the reference's eager distributed distinct
+        // (`core.py:561-566`)
+        require(marginCol.isEmpty,
+          "softprob has no per-class base_margin hook")
+        val numClasses =
+          data.select(max(col("label"))).first().getDouble(0).toInt + 1
+        val (m, hist) = SparseBoost.trainSoftprob(data, params, numClasses, weightCol)
+        return GraftBoostModel(m, featureCols, params.objective, numClasses,
+          Map("train" -> Map("mlogloss" -> hist)), imputation,
+          params.missingStrategy)
+      }
       val (m, histN) = SparseBoost.train(data, params, weightCol, marginCol)
       return GraftBoostModel(m, featureCols, params.objective,
         if (params.objective == "binary:logistic") 2 else 0,
         Map("train" -> Map(sparseMetricName(params.objective) -> histN)),
-        imputation, "native")
+        imputation, params.missingStrategy)
     }
 
     params.objective match {
@@ -705,39 +732,6 @@ object GraftBoost {
         val model = gbt.fit(data)
         GraftBoostModel(model, featureCols, params.objective, 0, Map.empty, imputation, params.missingStrategy)
 
-      case "reg:quantileerror" =>
-        // pinball-loss boosting with exact leaf-quantile line search —
-        // a custom loop (QuantileBoost), MLlib GBT has no quantile loss
-        require(validationCol.isEmpty,
-          "quantile boosting records its train history itself; " +
-          "validation-indicator early stopping is unavailable")
-        val (m, histQ) = QuantileBoost.train(data, params,
-          params.quantileAlpha, weightCol)
-        GraftBoostModel(m, featureCols, params.objective, 0,
-          Map("train" -> Map("pinball" -> histQ)), imputation,
-          params.missingStrategy)
-
-      case "reg:gamma" | "reg:tweedie" =>
-        // log-link deviance objectives — always the native histogram
-        // loop (SparseBoost); MLlib GBT has neither loss family
-        require(validationCol.isEmpty,
-          "gamma/tweedie boosting records its train history itself")
-        val (m, histG) = SparseBoost.train(data, params, weightCol, marginCol)
-        GraftBoostModel(m, featureCols, params.objective, 0,
-          Map("train" -> Map(sparseMetricName(params.objective) -> histG)),
-          imputation, params.missingStrategy)
-
-      case "count:poisson" =>
-        // log-link Newton boosting — a custom loop (PoissonBoost),
-        // MLlib GBT has neither Poisson loss nor link functions
-        require(validationCol.isEmpty,
-          "poisson boosting records its train history itself; " +
-          "validation-indicator early stopping is unavailable")
-        val (m, histP) = PoissonBoost.train(data, params, weightCol)
-        GraftBoostModel(m, featureCols, params.objective, 0,
-          Map("train" -> Map("poisson-deviance" -> histP)), imputation,
-          params.missingStrategy)
-
       case "binary:logistic" =>
         val gbt = new GBTClassifier()
           .setFeaturesCol("features").setLabelCol("label")
@@ -755,48 +749,36 @@ object GraftBoost {
         // Class inference = the reference's eager distributed
         // distinct (`core.py:561-566`).
         val numClasses = data.select(max(col("label"))).first().getDouble(0).toInt + 1
-        if (params.multiclassStrategy == "softprob") {
-          // the TRUE single-model mechanism (core.py:580-590): K trees
-          // per round on shared multinomial softmax gradients
-          require(validationCol.isEmpty,
-            "softprob multiclass records its train history itself; " +
-            "use multiclassStrategy=ovr for validation columns")
-          val (m, hist) = SoftprobBoost.train(data, params, numClasses, weightCol)
-          GraftBoostModel(m, featureCols, params.objective, numClasses,
-            Map("train" -> Map("mlogloss" -> hist)), imputation,
-            params.missingStrategy)
-        } else {
-          val model: Model[_] = params.multiclassStrategy match {
-            case "rf" =>
-              require(validationCol.isEmpty,
-                "RandomForest multiclass has no validation-based early stopping; " +
-                "use multiclassStrategy=ovr for validation columns")
-              val rf = new RandomForestClassifier()
-                .setFeaturesCol("features").setLabelCol("label")
-                .setNumTrees(params.numRound).setMaxDepth(params.maxDepth)
-                .setSubsamplingRate(params.subsample)
-                .setMinInstancesPerNode(params.minChildWeight)
-                .setMaxBins(params.maxBins)
-                .setSeed(params.seed)
-              weightCol.foreach(rf.setWeightCol)
-              rf.fit(data)
-            case _ =>
-              val base = new GBTClassifier()
-                .setFeaturesCol("features").setLabelCol("label")
-                .setMaxIter(params.numRound).setMaxDepth(params.maxDepth)
-                .setStepSize(params.eta).setSubsamplingRate(params.subsample)
-                .setMaxBins(params.maxBins)
-                .setSeed(params.seed)
-              weightCol.foreach(base.setWeightCol)
-              validationCol.foreach(base.setValidationIndicatorCol)
-              val ovr = new OneVsRest().setClassifier(base)
-                .setFeaturesCol("features").setLabelCol("label")
-              weightCol.foreach(ovr.setWeightCol)
-              ovr.fit(data)
-          }
-          GraftBoostModel(model, featureCols, params.objective, numClasses,
-            Map.empty, imputation, params.missingStrategy)
+        val model: Model[_] = params.multiclassStrategy match {
+          case "rf" =>
+            require(validationCol.isEmpty,
+              "RandomForest multiclass has no validation-based early stopping; " +
+              "use multiclassStrategy=ovr for validation columns")
+            val rf = new RandomForestClassifier()
+              .setFeaturesCol("features").setLabelCol("label")
+              .setNumTrees(params.numRound).setMaxDepth(params.maxDepth)
+              .setSubsamplingRate(params.subsample)
+              .setMinInstancesPerNode(params.minChildWeight)
+              .setMaxBins(params.maxBins)
+              .setSeed(params.seed)
+            weightCol.foreach(rf.setWeightCol)
+            rf.fit(data)
+          case _ =>
+            val base = new GBTClassifier()
+              .setFeaturesCol("features").setLabelCol("label")
+              .setMaxIter(params.numRound).setMaxDepth(params.maxDepth)
+              .setStepSize(params.eta).setSubsamplingRate(params.subsample)
+              .setMaxBins(params.maxBins)
+              .setSeed(params.seed)
+            weightCol.foreach(base.setWeightCol)
+            validationCol.foreach(base.setValidationIndicatorCol)
+            val ovr = new OneVsRest().setClassifier(base)
+              .setFeaturesCol("features").setLabelCol("label")
+            weightCol.foreach(ovr.setWeightCol)
+            ovr.fit(data)
         }
+        GraftBoostModel(model, featureCols, params.objective, numClasses,
+          Map.empty, imputation, params.missingStrategy)
 
       case other =>
         throw new IllegalArgumentException(s"unsupported objective: $other")
@@ -840,10 +822,7 @@ object GraftBoost {
       case m: GBTClassificationModel     => m.transform(data)
       case m: RandomForestClassificationModel => m.transform(data)
       case m: OneVsRestModel             => m.transform(data)
-      case m: SoftprobBoost.SoftprobModel => m.transform(data).drop("margins")
       case m: MultiSparse.MultiSparseModel => m.transform(data).drop("margins")
-      case m: QuantileBoost.QuantileModel => m.transform(data)
-      case m: PoissonBoost.PoissonModel   => m.transform(data)
       case m => throw new IllegalStateException(s"unknown model ${m.getClass}")
     }
     scored.drop("features", "rawPrediction", "probability")
@@ -896,11 +875,7 @@ object GraftBoost {
           Array(1.0 - p, p)
         })
         data.withColumn("proba", pU(col("features"))).drop("features")
-      case m: SoftprobBoost.SoftprobModel => softmaxProba(m.transform(data))
-      case m: MultiSparse.MultiSparseModel =>
-        // the ingested-document scorer shares the softprob path —
-        // its margins column has the same contract
-        softmaxProba(m.transform(data))
+      case m: MultiSparse.MultiSparseModel => softmaxProba(m.transform(data))
       case m: ProbabilisticClassificationModel[_, _] =>
         m.transform(data)
           .withColumn("proba", vector_to_array(col("probability")))
@@ -1067,14 +1042,9 @@ object GraftBoost {
             s"local OvR predict needs GBT per class, got ${other.getClass}")
         }
         scores.indices.maxBy(scores(_)).toDouble
-      case m: SoftprobBoost.SoftprobModel =>
-        val margins = m.marginsOf(f)
-        margins.indices.maxBy(margins(_)).toDouble
       case m: MultiSparse.MultiSparseModel =>
         val margins = m.marginsOf(f)
         margins.indices.maxBy(margins(_)).toDouble
-      case m: QuantileBoost.QuantileModel => m.predictOne(f)
-      case m: PoissonBoost.PoissonModel   => m.predictOne(f)
       case m: SparseBoost.SparseModel     => m.predictOne(f)
       case m: LinearBoost.LinearModel     => m.predictOne(f)
       case m => throw new UnsupportedOperationException(
@@ -1091,7 +1061,7 @@ object GraftBoost {
     */
   def featureImportances(model: GraftBoostModel): Map[String, Double] = {
     // equal-weight average over an ensemble's member importances,
-    // renormalized to sum 1 (shared by the OvR and softprob branches)
+    // renormalized to sum 1
     def avgNormalized(per: Seq[Array[Double]]): Array[Double] = {
       val avg = per.head.indices.map(i => per.map(_(i)).sum / per.length).toArray
       val total = avg.sum
@@ -1102,18 +1072,13 @@ object GraftBoost {
       case g: GBTClassificationModel          => g.featureImportances.toArray
       case g: RandomForestClassificationModel => g.featureImportances.toArray
       case o: OneVsRestModel => avgNormalized(o.models.map(ofModel))
-      case sp: SoftprobBoost.SoftprobModel =>
-        // average the h-weighted-variance importances over the whole
-        // joint forest, renormalized — every (round, class) tree
-        // contributes equally, matching XGBoost's gain averaging
-        avgNormalized(sp.trees.flatten.map(_.featureImportances.toArray))
       case sb: SparseBoost.SparseModel =>
         // per-feature total split gain accumulated during training —
         // XGBoost's `total_gain` importance, already normalized
         sb.importances
       case mm: MultiSparse.MultiSparseModel =>
-        // ingested multiclass document: normalized total_gain over
-        // the statistics rebuilt from loss_changes at ingest
+        // normalized total_gain — accumulated in training, or rebuilt
+        // from loss_changes at document ingest
         val g = mm.importanceByType("total_gain")
         val tot = g.sum
         if (tot > 0) g.map(_ / tot) else g

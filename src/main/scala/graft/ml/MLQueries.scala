@@ -194,7 +194,7 @@ object MLQueries {
 
   /** Quantile-regression lifecycle (XGBoost `reg:quantileerror` via
     * the params passthrough, `core.py:164-321`): pinball boosting with
-    * exact leaf-quantile line search ([[QuantileBoost]]) at α = 0.9
+    * exact leaf-quantile line search ([[SparseBoost]]) at α = 0.9
     * over the fact table. Gates: (a) train-set coverage lands near α
     * (a broken line search collapses to the squared-loss mean and
     * drops to ~0.5), and (b) the model's pinball loss beats the
@@ -237,7 +237,7 @@ object MLQueries {
       (col("target") - pred) * alpha, (col("target") - pred) * (alpha - 1.0)))
     // the model's base score IS the exact global α-quantile — reuse
     // it rather than paying the (expensive, exact) percentile twice
-    val q90 = m.model.asInstanceOf[QuantileBoost.QuantileModel].base
+    val q90 = m.model.asInstanceOf[SparseBoost.SparseModel].base
     val out = GraftBoost.predict(m, df)
       .agg(
         count(lit(1)).as("n_rows"),
@@ -333,7 +333,7 @@ object MLQueries {
   )
 
   /** Poisson count-regression lifecycle (XGBoost `count:poisson`,
-    * [[PoissonBoost]]): predict each order's LINE COUNT (a real count,
+    * [[SparseBoost]]): predict each order's LINE COUNT (a real count,
     * 1-7) from its total quantity — qty accumulates over lines
     * (~25.5/line), so the covariate is genuinely informative. Gates:
     * the fitted deviance beats the constant-rate model by ≥ 50 %
@@ -795,7 +795,7 @@ object MLQueries {
   )
 
   /** True single-model multi:softprob lifecycle (core.py:580-590
-    * MECHANISM parity — [[SoftprobBoost]]: K trees per round on
+    * MECHANISM parity — [[SparseBoost.trainSoftprob]]: K trees per round on
     * shared multinomial gradients, Newton leaves) on a 4-class slice
     * of the embeddings table. Gates: accuracy well above the majority
     * class, train mlogloss monotone improving over rounds, and the

@@ -18,16 +18,14 @@ import SparseBoost.{ImportanceAcc, SparseTree}
   * `tree_info` carries each tree's class id (round-major: round r owns
   * trees [r·K, (r+1)·K) for a plain K-class fit).
   *
-  * This is the scoring form behind multiclass [[XgbJson]] interchange
-  * (reference `core.py:580-590` rewrites binary objectives to
-  * `multi:softprob`; its tests `test_core.py:72-101` exercise the
-  * multiclass lifecycle): a stock XGBoost multiclass document ingests
-  * into this model and scores with serving semantics (NaN routed along
-  * each split's `default_left`), and the engine's own
-  * [[SoftprobBoost.SoftprobModel]] forests convert losslessly via
-  * [[MultiSparse.fromMLlibTree]] for export. Scoring broadcasts the
-  * model-sized tree arrays once — one map-side pass, no shuffle, no
-  * driver data path.
+  * One model for both multiclass sources (reference `core.py:580-590`
+  * rewrites binary objectives to `multi:softprob`; its tests
+  * `test_core.py:72-101` exercise the multiclass lifecycle): the
+  * engine's own softprob fits ([[SparseBoost.trainSoftprob]]) and
+  * stock XGBoost multiclass documents ingested by [[XgbJson]], which
+  * score with serving semantics (NaN routed along each split's
+  * `default_left`). Scoring broadcasts the model-sized tree arrays
+  * once — one map-side pass, no shuffle, no driver data path.
   */
 object MultiSparse {
 
@@ -68,10 +66,9 @@ object MultiSparse {
       new MultiSparseModel(uid, trees, treeInfo, numClasses, base,
         objective, stats, dartFolded)
 
-    /** Accumulated per-class margins for one feature vector — tree
-      * order, so a forest converted from [[SoftprobBoost]] sums each
-      * class's rounds in the exact order the original model does
-      * (bit-identical margins).
+    /** Accumulated per-class margins for one feature vector, summed
+      * in tree order — the order every scorer and exporter keeps, so
+      * margins are bit-identical across a document round trip.
       */
     def marginsOf(v: Vector): Array[Double] = {
       val m = Array.fill(numClasses)(base)
@@ -83,8 +80,15 @@ object MultiSparse {
     }
 
     /** Softmax probabilities (max-shifted) for one feature vector. */
-    def probaOf(v: Vector): Array[Double] =
-      SoftprobBoost.softmaxInPlace(marginsOf(v))
+    def probaOf(v: Vector): Array[Double] = softmaxInPlace(marginsOf(v))
+
+    /** Plain round-major layout: tree i feeds class i mod K. Round-
+      * indexed consumers (truncation, staged evaluation, the exported
+      * `iteration_indptr`) need it; an irregular `tree_info` has no
+      * round structure.
+      */
+    def roundMajor: Boolean = trees.length % numClasses == 0 &&
+      treeInfo.indices.forall(i => treeInfo(i) == i % numClasses)
 
     /** XGBoost `get_score` parity over recomputed split statistics —
       * one shared dispatch ([[ImportanceAcc.byType]]) with the same
@@ -104,8 +108,18 @@ object MultiSparse {
         .add(StructField("margins", ArrayType(DoubleType, containsNull = false)))
         .add(StructField("prediction", DoubleType))
 
-    override def transform(ds: Dataset[_]): DataFrame =
-      argmaxTransform(ds, this)((m, v) => m.marginsOf(v))
+    /** Appends `margins` (array of K doubles) and `prediction` — the
+      * argmax class id, ties breaking to the LOWEST class
+      * (array_position finds the first maximum).
+      */
+    override def transform(ds: Dataset[_]): DataFrame = {
+      val bc = ds.sparkSession.sparkContext.broadcast(this)
+      val mU = udf((v: Vector) => bc.value.marginsOf(v))
+      ds.withColumn("margins", mU(col("features")))
+        .withColumn("prediction",
+          (array_position(col("margins"), array_max(col("margins"))) - 1L)
+            .cast(DoubleType))
+    }
 
     /** Truncated copy keeping the first `rounds` boosting rounds —
       * XGBoost's `iteration_range` on a multiclass document. Needs
@@ -121,8 +135,6 @@ object MultiSparse {
         "cannot truncate a dart-folded forest: drop-weight rescales " +
         "mean no tree prefix reproduces a training-time round margin " +
         "(XGBoost likewise forbids ntree_limit with booster='dart')")
-      val roundMajor = trees.length % numClasses == 0 &&
-        treeInfo.indices.forall(i => treeInfo(i) == i % numClasses)
       require(roundMajor,
         "truncation needs the round-major tree layout (tree i -> " +
         "class i mod K); this document's tree_info is irregular")
@@ -149,46 +161,24 @@ object MultiSparse {
     }
   }
 
-  /** THE multiclass scoring transform, shared by both margin scorers
-    * ([[MultiSparseModel]] and [[SoftprobBoost.SoftprobModel]]):
-    * broadcast the model once, append `margins` (array of K doubles)
-    * and `prediction` — the argmax class id with ties breaking to the
-    * LOWEST class (array_position finds the first maximum). One
-    * definition so the tie-break contract can never drift between the
-    * trained and the ingested scorer.
-    */
-  private[ml] def argmaxTransform[M <: java.io.Serializable : scala.reflect.ClassTag](
-      ds: Dataset[_], model: M)(
-      marginsOf: (M, Vector) => Array[Double]): DataFrame = {
-    val bc = ds.sparkSession.sparkContext.broadcast(model)
-    val mU = udf((v: Vector) => marginsOf(bc.value, v))
-    ds.withColumn("margins", mU(col("features")))
-      .withColumn("prediction",
-        (array_position(col("margins"), array_max(col("margins"))) - 1L)
-          .cast(DoubleType))
-  }
-
-  /** Lossless array-form view of a trained softprob forest: round-
-    * major flatten (round r's K class trees in class order) with
-    * `tree_info` class ids — the exact layout [[XgbJson]] exports and
-    * the per-class sum order that keeps margins bit-identical to
-    * [[SoftprobBoost.SoftprobModel.marginsOf]]. Base margin is 0 (the
-    * softprob loop starts every class at F = 0).
-    */
-  def fromSoftprob(sp: SoftprobBoost.SoftprobModel): MultiSparseModel = {
-    val K = sp.numClasses
-    val flat = sp.trees.flatMap(_.map(fromMLlibTree(_, sp.eta)))
-    new MultiSparseModel(sp.uid + "_arr", flat,
-      Array.tabulate(flat.length)(_ % K), K, 0.0, "multi:softprob")
+  /** Max-shifted softmax of `m`, in place. */
+  private[ml] def softmaxInPlace(m: Array[Double]): Array[Double] = {
+    var mx = m(0); var k = 1
+    while (k < m.length) { if (m(k) > mx) mx = m(k); k += 1 }
+    var s = 0.0; k = 0
+    while (k < m.length) { m(k) = math.exp(m(k) - mx); s += m(k); k += 1 }
+    k = 0
+    while (k < m.length) { m(k) /= s; k += 1 }
+    m
   }
 
   /** Flatten one MLlib regression tree into the array form, scaling
-    * every node value by `scale` (the learning rate — XGBoost
-    * documents store η-scaled leaf values; internal `base_weights`
-    * then stay the cover-weighted subtree means of the scaled leaf
-    * outputs, because an MLlib variance-impurity node prediction IS
-    * the weight-weighted mean of its subtree's targets — the Saabas
-    * expectation holds by construction).
+    * every node value by `scale` (the GBT tree weight — XGBoost
+    * documents store a plain sum of scaled leaf values; internal
+    * `base_weights` then stay the cover-weighted subtree means of the
+    * scaled leaf outputs, because an MLlib variance-impurity node
+    * prediction IS the weight-weighted mean of its subtree's targets —
+    * the Saabas expectation holds by construction).
     *
     * Nodes are laid out breadth-first (root = 0). MLlib trees carry
     * no missing-value routing (`VectorAssembler` rejects NaN on these

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * and pins in `test_core.py:365-382`). MLlib rejects NaN features
   * outright, so the impute/sentinel strategies of [[GraftBoost]] were
   * approximations; this is the real mechanism, as a from-scratch
-  * histogram tree learner in the [[SoftprobBoost]]/[[QuantileBoost]]
-  * custom-loop family:
+  * histogram tree learner — the one tree grower behind every
+  * objective MLlib's GBT lacks:
   *
   *  1. per feature, split candidates are the exact (maxBins−1)
   *     quantiles of the NON-missing values — XGBoost's global
@@ -39,12 +39,15 @@ import org.apache.spark.sql.types._
   *     approximate it with minInstancesPerNode.
   *
   * Objectives: `binary:logistic` (g = p − y, h = p(1−p)),
-  * `reg:squarederror` (g = f − y, h = 1), and the log-link deviance
-  * pair `reg:gamma` / `reg:tweedie` (XGBoost's insurance-severity
-  * objectives; exact Newton g/h on the margin scale, predictions on
-  * the response scale e^f). binary/squared are reached under
-  * `missingStrategy = "native"`; gamma/tweedie ALWAYS train here —
-  * MLlib GBT has neither loss family.
+  * `reg:squarederror` (g = f − y, h = 1), the log-link deviance
+  * objectives `reg:gamma` / `reg:tweedie` / `count:poisson` (exact
+  * Newton g/h on the margin scale, predictions on the response scale
+  * e^f), `reg:quantileerror` (pinball subgradient with h = 1, leaves
+  * set by the exact α-quantile line-search of [[quantileLeaves]]) and
+  * `multi:softprob` ([[trainSoftprob]]: K trees per round on the
+  * shared softmax). binary/squared are reached under
+  * `missingStrategy = "native"`; the others ALWAYS train here — MLlib
+  * GBT has none of those losses.
   *
   * Determinism: histogram partials merge through [[PartialFold]] —
   * partition-index-ordered folds whose addition tree is a pure
@@ -210,10 +213,9 @@ object SparseBoost {
     def probOf(v: Vector): Double = 1.0 / (1.0 + math.exp(-marginOf(v)))
 
     /** Response-scale value of a margin — the objective's inverse
-      * link. count:* only arises via XgbJson ingest (training routes
-      * count:poisson to PoissonBoost); without that arm an ingested
-      * Poisson document would silently emit log-rates instead of
-      * counts.
+      * link. Without the count:* arm a Poisson forest (trained, or
+      * ingested from any count:* document) would silently emit
+      * log-rates instead of counts.
       */
     private[ml] def link(f: Double): Double = objective match {
       case "binary:logistic" => if (f > 0.0) 1.0 else 0.0
@@ -948,8 +950,8 @@ object SparseBoost {
       path: Set[Int] = Set.empty, depth: Int = 0)
 
   /** Mean loss of margin column `f` for the round history. */
-  private def lossOf(df: DataFrame, objective: String, rho: Double): Double =
-    objective match {
+  private def lossOf(df: DataFrame, params: GraftBoost.BoostParams): Double =
+    params.objective match {
       case "binary:logistic" =>
         // logloss with the standard 1e-15 clip
         val p = lit(1.0) / (lit(1.0) + exp(-col("f")))
@@ -964,55 +966,58 @@ object SparseBoost {
       case "reg:tweedie" =>
         // tweedie negative log-likelihood kernel (XGBoost's
         // tweedie-nloglik@ρ): −y·e^{(1−ρ)f}/(1−ρ) + e^{(2−ρ)f}/(2−ρ)
+        val rho = params.tweedieVariancePower
         df.select(avg(
           -col("label") * exp(lit(1.0 - rho) * col("f")) / (1.0 - rho) +
           exp(lit(2.0 - rho) * col("f")) / (2.0 - rho))).head().getDouble(0)
+      case "count:poisson" =>
+        // mean Poisson deviance 2·(y·ln(y/μ) − (y−μ)), μ = e^f; the
+        // y·ln(y/μ) term is 0 at y = 0
+        val mu = exp(col("f"))
+        df.select(avg(lit(2.0) * (
+          when(col("label") > 0.0, col("label") * log(col("label") / mu))
+            .otherwise(lit(0.0)) - (col("label") - mu)))).head().getDouble(0)
+      case "reg:quantileerror" =>
+        // mean pinball (check) loss at α
+        val a = params.quantileAlpha
+        val r = col("label") - col("f")
+        df.select(avg(greatest(r * a, r * (a - 1.0)))).head().getDouble(0)
       case _ =>
         df.select(sqrt(avg(pow(col("label") - col("f"), 2)))).head().getDouble(0)
     }
 
-  /** Train the sparsity-aware booster. `data` must carry `features`
-    * (vector; NaN marks missing) and `label`; an optional weight
-    * column scales each row's (g, h) — XGBoost's instance weights.
-    *
-    * `marginCol` names a per-row `base_margin` column (the reference
-    * forwards it through `dmatrix_kwargs`, `core.py:143-147`): the
-    * boosting recursion starts from that row's margin INSTEAD of the
-    * scalar base — stock semantics, where a supplied base_margin makes
-    * base_score unused. The classic boosting-continuation pattern:
-    * score an existing model's margins, pass them here, and the new
-    * trees continue that fit exactly. The returned model still carries
-    * the scalar base, so standalone scoring (no margin) falls back to
-    * base_score — also stock behavior.
-    *
-    * @return the model plus the per-round TRAIN loss history
-    *         (logloss for binary:logistic, rmse for reg:squarederror)
+  /** Objectives MLlib's GBT has no loss for: [[GraftBoost.train]]
+    * trains them here under every `missingStrategy`.
     */
-  def train(
-      data: DataFrame,
-      params: GraftBoost.BoostParams,
-      weightCol: Option[String] = None,
-      marginCol: Option[String] = None
-  ): (SparseModel, Array[Double]) = {
-    require(Set("binary:logistic", "reg:squarederror", "reg:gamma",
-      "reg:tweedie").contains(params.objective),
-      s"native sparse boosting supports binary:logistic, reg:squarederror, " +
-      s"reg:gamma and reg:tweedie, got ${params.objective}")
-    val binary = params.objective == "binary:logistic"
-    val rho = params.tweedieVariancePower
-    if (params.objective == "reg:tweedie")
-      require(rho > 1.0 && rho < 2.0,
-        s"tweedie variance power must be in (1, 2), got $rho")
-    val keep = Seq(col("features"), col("label")) ++ weightCol.map(col) ++
-      marginCol.map(c => GraftBoost.marginColumn(c).as("graft_bm"))
-    val src = data.select(keep: _*)
+  private[ml] val NativeOnlyObjectives =
+    Set("reg:gamma", "reg:tweedie", "count:poisson", "reg:quantileerror")
 
-    val sc = data.sparkSession.sparkContext
-    sc.setJobDescription("boost: propose-edges")
-    val numFeat = src.select(col("features")).head().getAs[Vector](0).size
-    val edges = proposeEdges(src, numFeat, params.maxBins, params.splitProposal)
+  /** Single-margin objectives [[train]] accepts. */
+  private val ScalarObjectives =
+    Seq("binary:logistic", "reg:squarederror") ++ NativeOnlyObjectives
+
+  /** `count:poisson`, `reg:quantileerror` and softprob train plain
+    * depthwise gbtree rounds only: DART, lossguide, parallel trees and
+    * per-row base_margin have no path for them.
+    */
+  private def requirePlainRound(
+      params: GraftBoost.BoostParams, marginCol: Option[String]): Unit =
+    require(params.booster == "gbtree" && params.growPolicy == "depthwise" &&
+      params.numParallelTree == 1 && marginCol.isEmpty,
+      s"${params.objective} trains plain depthwise gbtree rounds: dart, " +
+      "lossguide, num_parallel_tree > 1 and base_margin are unsupported")
+
+  /** Per-fit grower inputs shared by [[train]] and [[trainSoftprob]]:
+    * the feature width, the split candidates, the monotone vector and
+    * the per-tree `colsample_bytree` draw.
+    */
+  private final class FitSetup(src: DataFrame, params: GraftBoost.BoostParams) {
+    src.sparkSession.sparkContext.setJobDescription("boost: propose-edges")
+    val numFeat: Int = src.select(col("features")).head().getAs[Vector](0).size
+    val edges: Array[Array[Double]] =
+      proposeEdges(src, numFeat, params.maxBins, params.splitProposal)
     validateFeatureParams(params, numFeat)
-    val constraints =
+    val constraints: Array[Int] =
       if (params.monotoneConstraints.isEmpty) new Array[Int](numFeat)
       else params.monotoneConstraints.toArray
     require(params.colsampleBytree > 0.0 && params.colsampleBytree <= 1.0,
@@ -1040,17 +1045,111 @@ object SparseBoost {
         mask
       }
 
+    /** Grow one tree on `fit`'s (g, h) columns with the round's draws. */
+    def grow(fit: DataFrame, acc: ImportanceAcc, idx: Int): SparseTree =
+      growTree(fit, edges, params, acc, roundMask(idx), constraints,
+        params.seed ^ (1337L * idx))
+  }
+
+  /** The α-quantile leaf line-search of `reg:quantileerror`
+    * (Friedman's TreeBoost step; sklearn's quantile
+    * `_update_terminal_region`): each leaf's Newton weight becomes η ×
+    * the exact α-quantile of the residuals y − f of the rows that
+    * landed in it, over the round sample the tree grew on. One keyed
+    * `percentile` pass: a leaf's value multiset is partition-order-free,
+    * so the merges run one leaf per task — the explicit keyed
+    * repartition stops AQE coalescing this small shuffle back onto ONE
+    * reducer (×4 oversampling against hash collisions). Unweighted:
+    * `percentile`'s frequency argument is integral, so fractional
+    * weights cannot reach the order statistic.
+    */
+  private def quantileLeaves(
+      tree: SparseTree, rows: DataFrame, params: GraftBoost.BoostParams): Unit = {
+    val sc = rows.sparkSession.sparkContext
+    val bc = sc.broadcast(tree)
+    val leafU = udf((v: Vector) => bc.value.leafOf(v))
+    val nLeaves = tree.feature.count(_ < 0)
+    val parts = math.max(1, math.min(sc.defaultParallelism, nLeaves * 4))
+    rows.withColumn("leaf", leafU(col("features")))
+      .repartition(parts, col("leaf"))
+      .groupBy(col("leaf"))
+      .agg(percentile(col("label") - col("f"), lit(params.quantileAlpha)))
+      .collect()
+      .foreach(r => tree.value(r.getInt(0)) = params.eta * r.getDouble(1))
+  }
+
+  /** Train the sparsity-aware booster. `data` must carry `features`
+    * (vector; NaN marks missing) and `label`; an optional weight
+    * column scales each row's (g, h) — XGBoost's instance weights.
+    *
+    * `marginCol` names a per-row `base_margin` column (the reference
+    * forwards it through `dmatrix_kwargs`, `core.py:143-147`): the
+    * boosting recursion starts from that row's margin INSTEAD of the
+    * scalar base — stock semantics, where a supplied base_margin makes
+    * base_score unused. The classic boosting-continuation pattern:
+    * score an existing model's margins, pass them here, and the new
+    * trees continue that fit exactly. The returned model still carries
+    * the scalar base, so standalone scoring (no margin) falls back to
+    * base_score — also stock behavior.
+    *
+    * @return the model plus the per-round TRAIN loss history (the
+    *         objective's [[GraftBoost.sparseMetricName]] metric)
+    */
+  def train(
+      data: DataFrame,
+      params: GraftBoost.BoostParams,
+      weightCol: Option[String] = None,
+      marginCol: Option[String] = None
+  ): (SparseModel, Array[Double]) =
+    GraftBoost.keepingJobDescription(data.sparkSession.sparkContext) {
+      fitScalar(data, params, weightCol, marginCol)
+    }
+
+  private def fitScalar(
+      data: DataFrame,
+      params: GraftBoost.BoostParams,
+      weightCol: Option[String],
+      marginCol: Option[String]
+  ): (SparseModel, Array[Double]) = {
+    require(ScalarObjectives.contains(params.objective),
+      s"native sparse boosting supports ${ScalarObjectives.mkString(", ")}, " +
+      s"got ${params.objective}")
+    val binary = params.objective == "binary:logistic"
+    val quantile = params.objective == "reg:quantileerror"
+    val alpha = params.quantileAlpha
+    val rho = params.tweedieVariancePower
+    if (params.objective == "reg:tweedie")
+      require(rho > 1.0 && rho < 2.0,
+        s"tweedie variance power must be in (1, 2), got $rho")
+    if (params.objective == "count:poisson" || quantile)
+      requirePlainRound(params, marginCol)
+    if (quantile) {
+      require(alpha > 0.0 && alpha < 1.0, s"alpha must be in (0,1), got $alpha")
+      require(params.monotoneConstraints.isEmpty,
+        "reg:quantileerror's leaf line-search has no monotone fence")
+    }
+    val keep = Seq(col("features"), col("label")) ++ weightCol.map(col) ++
+      marginCol.map(c => GraftBoost.marginColumn(c).as("graft_bm"))
+    val src = data.select(keep: _*)
+
+    val sc = data.sparkSession.sparkContext
+    val setup = new FitSetup(src, params)
+    val numFeat = setup.numFeat
+
     // XGBoost base_score = 0.5: margin 0 for logistic, 0.5 for
     // squared error. The log-link objectives start from ln(mean) —
-    // the intercept MLE, same convention as [[PoissonBoost]]
+    // the intercept MLE; quantile from the exact label α-quantile
     val base =
       if (!params.baseScore.isNaN) params.baseScore
       else params.objective match {
         case "binary:logistic" => 0.0
-        case "reg:gamma" | "reg:tweedie" =>
+        case "reg:gamma" | "reg:tweedie" | "count:poisson" =>
           val mean = src.select(avg(col("label"))).head().getDouble(0)
           require(mean > 0.0, "log-link objectives need a positive label mean")
           math.log(mean)
+        case "reg:quantileerror" =>
+          sc.setJobDescription("boost: base-quantile")
+          src.select(percentile(col("label"), lit(alpha))).head().getDouble(0)
         case _ => 0.5
       }
     // per-row base_margin REPLACES the scalar base as the boosting
@@ -1114,6 +1213,16 @@ object SparseBoost {
           val b = exp(lit(2.0 - rho) * fm)
           (b - a,
             greatest(lit(2.0 - rho) * b - lit(1.0 - rho) * a, lit(1e-16)))
+        case "count:poisson" =>
+          // Poisson deviance, log link: g = μ − y, h = μ, the rate
+          // floored so the hessian stays strictly positive
+          val mu = greatest(exp(fm), lit(1e-6))
+          (mu - col("label"), mu)
+        case "reg:quantileerror" =>
+          // pinball subgradient 1{y ≤ f} − α ∈ {1−α, −α}, unit hessian;
+          // the leaf values come from the line-search below
+          (when(col("label") <= fm, lit(1.0 - alpha)).otherwise(lit(-alpha)),
+            lit(1.0))
         case _ => (fm - col("label"), lit(1.0))
       }
       // instance weight = user weight × scale_pos_weight on positives
@@ -1146,9 +1255,12 @@ object SparseBoost {
         sc.setJobDescription(s"boost: r$r grow")
         val sampledT = GraftBoost.roundSample(withS, params.subsample,
           params.seed + 197L * idx)
-        val tree = growTree(
-          sampledT.withColumn("g", gw).withColumn("h", hw), edges, params,
-          roundAcc, roundMask(idx), constraints, params.seed ^ (1337L * idx))
+        val tree = setup.grow(
+          sampledT.withColumn("g", gw).withColumn("h", hw), roundAcc, idx)
+        if (quantile) {
+          sc.setJobDescription(s"boost: r$r gamma")
+          quantileLeaves(tree, sampledT, params)
+        }
         // "sum" (XGBoost compat) keeps member trees unscaled; the
         // default averages them (1/T pre-scale, see BoostParams)
         if (T > 1 && params.parallelTreeUpdate == "average") {
@@ -1191,9 +1303,8 @@ object SparseBoost {
       }
       forest ++= newTrees
       sc.setJobDescription(s"boost: r$r loss")
-      hist += lossOf(cur, params.objective, rho)
+      hist += lossOf(cur, params)
     }
-    sc.setJobDescription(null)
     val acc = ImportanceAcc.sum(roundAccs.toSeq, numFeat)
     val gSum = acc.gain.sum
     val imp = if (gSum > 0) acc.gain.map(_ / gSum) else acc.gain.clone()
@@ -1201,4 +1312,83 @@ object SparseBoost {
       params.objective, imp, acc, Some(roundAccs.toSeq),
       params.numParallelTree, anyDartRescale), hist.toArray)
   }
+
+  /** Train a `multi:softprob` forest — the single-model multiclass
+    * mechanism of the reference (`core.py:580-590`), not one-vs-rest:
+    * each round grows K trees on the SHARED softmax of the carried
+    * per-row margins, class k's tree on g = p_k − y_k,
+    * h = p_k(1 − p_k) (floored at 1e-6), through the same [[growTree]]
+    * as the scalar objectives — Newton leaves, NaN default branches,
+    * hessian min_child_weight. All K trees of a round see one
+    * deterministic subsample. `data` must carry `features` and
+    * `label` (class ids 0..K−1); an optional weight column scales
+    * every class's (g, h).
+    *
+    * @return the round-major forest (tree i → class i mod K, base
+    *         margin 0) plus the per-round TRAIN mlogloss history
+    */
+  def trainSoftprob(
+      data: DataFrame,
+      params: GraftBoost.BoostParams,
+      numClasses: Int,
+      weightCol: Option[String] = None
+  ): (MultiSparse.MultiSparseModel, Array[Double]) =
+    GraftBoost.keepingJobDescription(data.sparkSession.sparkContext) {
+      require(numClasses >= 2, s"numClasses must be >= 2, got $numClasses")
+      requirePlainRound(params, None)
+      val K = numClasses
+      val sc = data.sparkSession.sparkContext
+      val src = data.select((Seq(col("features"), col("label")) ++
+        weightCol.map(col)): _*)
+      val setup = new FitSetup(src, params)
+
+      // p = softmax(f) rides the checkpoint next to the margins it is
+      // computed from: the round's K gradient passes and its mlogloss
+      // all read it
+      val softmax = udf((f: Seq[Double]) => MultiSparse.softmaxInPlace(f.toArray))
+      sc.setJobDescription("boost: init-margin")
+      var cur = src.withColumn("f", array_repeat(lit(0.0), K))
+        .withColumn("p", softmax(col("f"))).localCheckpoint()
+
+      val roundAccs = new ArrayBuffer[ImportanceAcc](params.numRound)
+      val hist = new ArrayBuffer[Double](params.numRound)
+      val forest = new ArrayBuffer[SparseTree](params.numRound * K)
+      for (r <- 1 to params.numRound) {
+        val fitBase = GraftBoost.roundSample(cur, params.subsample,
+          params.seed + 197L * r)
+        val roundAcc = ImportanceAcc(setup.numFeat)
+        roundAccs += roundAcc
+        val roundTrees = Array.tabulate(K) { k =>
+          val pk = element_at(col("p"), k + 1)
+          val g = pk - when(col("label") === k.toDouble, lit(1.0)).otherwise(lit(0.0))
+          val h = greatest(pk * (lit(1.0) - pk), lit(1e-6))
+          val (gw, hw) = weightCol.map(col) match {
+            case Some(wc) => (g * wc, h * wc)
+            case None => (g, h)
+          }
+          sc.setJobDescription(s"boost: r$r class-$k grow")
+          setup.grow(fitBase.withColumn("g", gw).withColumn("h", hw), roundAcc,
+            (r - 1) * K + k + 1)
+        }
+        val bc = sc.broadcast(roundTrees)
+        val upd = udf((v: Vector, f: Seq[Double]) => {
+          val out = f.toArray
+          var k = 0
+          while (k < K) { out(k) += bc.value(k).valueOf(v); k += 1 }
+          out
+        })
+        sc.setJobDescription(s"boost: r$r margin-update")
+        cur = cur.withColumn("f", upd(col("features"), col("f")))
+          .withColumn("p", softmax(col("f"))).localCheckpoint()
+        forest ++= roundTrees
+        sc.setJobDescription(s"boost: r$r loss")
+        hist += cur.select(avg(-log(greatest(
+            element_at(col("p"), col("label").cast("int") + 1), lit(1e-15)))))
+          .head().getDouble(0)
+      }
+      (new MultiSparse.MultiSparseModel(s"softprob_${params.seed}",
+        forest.toArray, Array.tabulate(forest.length)(_ % K), K, 0.0,
+        "multi:softprob", ImportanceAcc.sum(roundAccs.toSeq, setup.numFeat)),
+        hist.toArray)
+    }
 }

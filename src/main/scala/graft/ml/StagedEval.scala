@@ -118,12 +118,14 @@ object StagedEval {
   }
 
   /** (round, per-example mlogloss, correct-indicator, weight) rows
-    * for a OneVsRest-over-GBT multiclass model: one distributed pass
-    * accumulates every class's staged margin simultaneously, applies
-    * the same softmax as [[GraftBoost.predictProba]]'s OvR path per
-    * round, and emits the per-example metric parts narrow so the
-    * per-round metrics are plain groupBy aggregations — reference
-    * `multi:softprob` eval-history semantics (`core.py:120, 580-590`).
+    * for a multiclass forest — OneVsRest over GBT, or a native softprob
+    * forest ([[MultiSparse.MultiSparseModel]], round-major layout):
+    * one distributed pass accumulates every class's staged margin
+    * simultaneously, applies the same softmax as
+    * [[GraftBoost.predictProba]] per round, and emits the per-example
+    * metric parts narrow so the per-round metrics are plain groupBy
+    * aggregations — reference `multi:softprob` eval-history semantics
+    * (`core.py:120, 580-590`).
     */
   private def stagedMulticlass(
       model: GraftBoost.GraftBoostModel,
@@ -132,40 +134,51 @@ object StagedEval {
       weightCol: Option[String]
   ): DataFrame = {
     val data = graft.functions.GraftFunctions.fanOut(
-      GraftBoost.assemble(df, model.featureCols, model.imputation)
+      GraftBoost.assemble(df, model.featureCols, model.imputation,
+        keepNaN = model.missingStrategy == "native")
       .withColumn("label", col(labelCol).cast("double"))
       .withColumn("w", weightCol.map(col(_).cast("double")).getOrElse(lit(1.0)))
       .select(col("features"), col("label"), col("w")))
     val spark = df.sparkSession
     import spark.implicits._
 
-    val perClass = model.model match {
+    // (initial margin, steps(r)(c) = round r's margin increment for
+    // class c)
+    val (init: Double, steps: Array[Array[Vector => Double]]) = model.model match {
       case m: OneVsRestModel =>
-        m.models.map {
+        val perClass = m.models.map {
           case g: GBTClassificationModel => (g.trees, g.treeWeights)
           case other => throw new UnsupportedOperationException(
             s"staged multiclass needs GBT per class, got ${other.getClass}")
         }
+        (0.0, Array.tabulate(perClass.map(_._1.length).min, perClass.length) {
+          (r, c) => (v: Vector) => perClass(c)._2(r) * perClass(c)._1(r).predict(v)
+        })
+      case m: MultiSparse.MultiSparseModel =>
+        require(m.roundMajor && !m.dartFolded,
+          "staged multiclass metrics need a round-major, non-dart forest " +
+          "(tree i -> class i mod K)")
+        (m.base, Array.tabulate(m.trees.length / m.numClasses, m.numClasses) {
+          (r, c) => (v: Vector) => m.trees(r * m.numClasses + c).valueOf(v)
+        })
       case m => throw new UnsupportedOperationException(
-        s"staged multiclass metrics need a OneVsRest model, got ${m.getClass}")
+        "staged multiclass metrics need a OneVsRest or softprob forest, " +
+        s"got ${m.getClass}")
     }
-    val b = spark.sparkContext.broadcast(perClass)
+    val b = spark.sparkContext.broadcast((init, steps))
 
     data.as[(Vector, Double, Double)].mapPartitions { it =>
-      val pc = b.value
-      val nC = pc.length
-      val rounds = pc.map(_._1.length).min
+      val (i0, ts) = b.value
+      val nC = ts.headOption.map(_.length).getOrElse(0)
       it.flatMap { case (features, label, w) =>
         val li = label.toInt
         require(li >= 0 && li < nC && li.toDouble == label,
           s"label $label out of range for $nC classes (eval frame contains " +
           "a class the model was not trained on?)")
-        val margins = new Array[Double](nC)
-        (0 until rounds).iterator.map { r =>
+        val margins = Array.fill(nC)(i0)
+        ts.indices.iterator.map { r =>
           var c = 0
-          while (c < nC) {
-            margins(c) += pc(c)._2(r) * pc(c)._1(r).predict(features); c += 1
-          }
+          while (c < nC) { margins(c) += ts(r)(c)(features); c += 1 }
           var mx = margins(0); var argmax = 0
           var i = 1
           while (i < nC) {
@@ -187,7 +200,8 @@ object StagedEval {
     * (`core.py:138-151`) for the weighted metrics (logloss/rmse/
     * mlogloss/merror — the reference's weighted eval path; AUC stays
     * unweighted). Binary/regression metrics need a single GBT model;
-    * "mlogloss"/"merror" need a OneVsRest-over-GBT multiclass model.
+    * "mlogloss"/"merror" need a OneVsRest-over-GBT or softprob
+    * multiclass forest.
     */
   def history(
       model: GraftBoost.GraftBoostModel,

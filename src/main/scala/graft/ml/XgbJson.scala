@@ -14,16 +14,16 @@ import SparseBoost.{ImportanceAcc, SparseModel, SparseTree}
   * portable to stock XGBoost tooling and vice versa. Covers all three
   * public booster slots:
   *
-  *  - `gbtree` — the native-loop forests ([[SparseBoost.SparseModel]]),
-  *    single-target AND multiclass (`num_class` = K with round-major
+  *  - `gbtree` — the native-loop forests, single-target
+  *    ([[SparseBoost.SparseModel]]) AND multiclass
+  *    ([[MultiSparse.MultiSparseModel]], the true-softprob forests of
+  *    reference `core.py:580-590`: `num_class` = K with round-major
   *    trees and per-tree class ids in `tree_info`, the schema's
-  *    multiclass layout). The engine's true-softprob forests
-  *    ([[SoftprobBoost.SoftprobModel]], reference `core.py:580-590`)
-  *    export through a lossless MLlib→array conversion
-  *    ([[MultiSparse.fromMLlibTree]]); multiclass documents ingest
-  *    into the native [[MultiSparse.MultiSparseModel]] scorer. The
-  *    wrapped MLlib GBT paths export too: regression folds each tree
-  *    weight into its node values (margins bit-exact), binary
+  *    multiclass layout); multiclass documents ingest into the same
+  *    native scorer. The wrapped MLlib GBT paths export through a
+  *    lossless MLlib→array walk ([[MultiSparse.fromMLlibTree]]):
+  *    regression folds each tree weight into its node values
+  *    (margins bit-exact), binary
   *    classification folds 2·wᵢ so stock `sigmoid(margin)` matches
   *    MLlib's probability to complement-form rounding (~ulp(1);
   *    MLlib evaluates 1 − sigmoid(−2m)) with the decision boundary
@@ -68,10 +68,6 @@ import SparseBoost.{ImportanceAcc, SparseModel, SparseTree}
   *    `graft.stats_absent` attribute; ingest honors the marker by
   *    restoring "stats unavailable" (empty gain arrays, no aggregate
   *    stats) instead of silently converting absence into real 0.0s.
-  *  - SOFTPROB GAINS. The softprob forest's per-node gains are
-  *    MLlib's hessian-weighted variance-impurity decreases — genuine
-  *    loss changes, but not XGBoost's regularized Newton gain formula
-  *    (divergence stamped; covers and structure are exact).
   *  - DART WEIGHTS. This engine folds dropout normalization into the
   *    stored leaf values at train time (the stored forest is a plain
   *    sum), so its dart export carries `weight_drop` of all 1.0 —
@@ -148,12 +144,16 @@ object XgbJson {
     * `dart` when dropout rounds fired), softprob / ingested
     * multiclass forests → multiclass `gbtree`, wrapped MLlib GBT →
     * `gbtree` (tree weights folded into node values), linear models
-    * → `gblinear`, Poisson Newton loop → `gbtree count:poisson`.
-    * Refuses quantile / ranking / RF-multiclass models — their
+    * → `gblinear`. Refuses quantile / RF-multiclass models — their
     * scoring rules have no schema slot; [[ModelIO]] persists those.
     */
   def export(model: GraftBoostModel): String = model.model match {
     case sm: SparseModel =>
+      // gbtree leaf values are Newton steps; a quantile forest's are
+      // α-quantile line-search steps, which no stock loader re-derives
+      require(sm.objective != "reg:quantileerror",
+        "reg:quantileerror forests carry line-search leaf quantiles the " +
+        "schema has no slot for — use ModelIO to persist them")
       val maxIdx = sm.trees.iterator.flatMap(_.feature.iterator)
         .filter(_ >= 0).maxOption.getOrElse(-1)
       namedFeatureGuard(model, maxIdx)
@@ -203,27 +203,6 @@ object XgbJson {
         dartRescaled = mm.dartFolded,
         categoricalFeatures = categoricalSlots(mm.trees))
 
-    case sp: SoftprobBoost.SoftprobModel =>
-      // round-major flatten: round r emits its K class trees in class
-      // order, tree_info carrying the class ids — the schema's
-      // multiclass layout. The MLlib→array conversion is lossless
-      // (thresholds/leaf outputs bit-exact; covers from the weighted
-      // node stats; see MultiSparse.fromMLlibTree).
-      val mm = MultiSparse.fromSoftprob(sp)
-      val K = mm.numClasses
-      val maxIdx = mm.trees.iterator.flatMap(_.feature.iterator)
-        .filter(_ >= 0).maxOption.getOrElse(-1)
-      namedFeatureGuard(model, maxIdx)
-      val booster = JObject(
-        "model" -> treeModelJson(mm.trees, mm.treeInfo,
-          model.featureCols.length, K),
-        "name" -> JString("gbtree"))
-      learnerDoc(model, booster, numClass = K, baseMargin = 0.0,
-        objectiveJson("multi:softprob", K), statsAbsent = false,
-        extraDivergence = "; softprob per-node gains are MLlib " +
-          "hessian-weighted variance decreases, not regularized " +
-          "Newton gains")
-
     case lm: LinearModel =>
       namedFeatureGuard(model, lm.weights.length - 1)
       require(lm.weights.length == model.featureCols.length,
@@ -252,15 +231,6 @@ object XgbJson {
           .map { case (t, w) => MultiSparse.fromMLlibTree(t, w) },
         model.objective, baseMargin = 0.0)
 
-    // Poisson Newton loop: μ = exp(base + η·Σ treeᵣ(x)) — η folds
-    // into the node values, the log-link base rides base_score (exp
-    // link) + the exact margin attribute; ingest scores exp(margin)
-    // via the count:* arm of SparseModel.predictOne
-    case pm: PoissonBoost.PoissonModel =>
-      walkedGbtreeDoc(model,
-        pm.trees.map(MultiSparse.fromMLlibTree(_, pm.eta)),
-        "count:poisson", baseMargin = pm.base)
-
     // MLlib binary GBT probability = sigmoid(2·Σ wᵢ·treeᵢ(x)) —
     // folding 2·wᵢ into the node values makes stock XGBoost's
     // sigmoid(margin) reproduce the probability up to the complement
@@ -274,15 +244,15 @@ object XgbJson {
 
     case other => throw new IllegalArgumentException(
       "XGBoost JSON interchange covers the native-loop forests " +
-      "(single and multiclass), softprob forests, the wrapped MLlib " +
-      s"GBT paths and the linear booster; got " +
+      "(single and multiclass), the wrapped MLlib GBT paths and the " +
+      s"linear booster; got " +
       s"${other.getClass.getSimpleName} — use ModelIO for " +
       "engine-native persistence")
   }
 
   /** Single-target gbtree document for an MLlib-walked forest (the
-    * wrapped GBT paths and the Poisson Newton loop): one shared guard
-    * + booster + learner assembly so the three arms cannot drift.
+    * wrapped GBT paths): one shared guard + booster + learner assembly
+    * so the two arms cannot drift.
     */
   private def walkedGbtreeDoc(
       model: GraftBoostModel,
@@ -312,12 +282,8 @@ object XgbJson {
     * has the plain round-major layout, else the whole forest is one
     * iteration (a safe `iteration_indptr` for irregular layouts).
     */
-  private def treesPerIteration(mm: MultiSparseModel): Int = {
-    val K = mm.numClasses
-    val roundMajor = mm.trees.length % K == 0 &&
-      mm.treeInfo.indices.forall(i => mm.treeInfo(i) == i % K)
-    if (roundMajor) K else mm.trees.length
-  }
+  private def treesPerIteration(mm: MultiSparseModel): Int =
+    if (mm.roundMajor) mm.numClasses else mm.trees.length
 
   private def objectiveJson(name: String, numClass: Int): JObject =
     if (name.startsWith("multi:"))

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ml._
 import graft.ml.GraftBoost._
 
-/** Poisson count boosting ([[PoissonBoost]]) — XGBoost's
-  * `count:poisson` (log link, Newton leaves), via the reference's
+/** Poisson count boosting on the native grower ([[SparseBoost]]) —
+  * XGBoost's `count:poisson` (log link, Newton leaves), via the reference's
   * params passthrough (`core.py:164-321`). Pins convergence to
   * per-region Poisson MLEs (= region means), deviance monotonicity,
   * positivity of the count-scale output, lifecycle dispatch and the

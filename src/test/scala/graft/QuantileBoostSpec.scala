@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ml._
 import graft.ml.GraftBoost._
 
-/** Quantile-regression boosting ([[QuantileBoost]]) — XGBoost's
+/** Quantile-regression boosting on the native grower
+  * ([[SparseBoost]]) — XGBoost's
   * `reg:quantileerror` (pinball loss), reached through the reference's
   * params-dict passthrough (`core.py:164-321`). Pins the mechanism
   * (exact leaf-quantile line search), the statistical contract
@@ -168,14 +169,15 @@ class QuantileBoostSpec extends AnyFunSuite {
       val w = if (i % 2 == 0) 100.0 else 1.0
       (x1, x2, y, w)
     }.toDF("x1", "x2", "y", "w")
-    val unw = QuantileBoost.train(
+    val p = BoostParams("reg:quantileerror", numRound = 2, maxDepth = 2,
+      quantileAlpha = 0.5)
+    val unw = SparseBoost.train(
       GraftBoost.assemble(mixed, Seq("x1", "x2"), None)
-        .withColumn("label", col("y")),
-      BoostParams(numRound = 2, maxDepth = 2), 0.5, None)._1
-    val wtd = QuantileBoost.train(
+        .withColumn("label", col("y")), p, None)._1
+    val wtd = SparseBoost.train(
       GraftBoost.assemble(mixed, Seq("x1", "x2"), None)
         .withColumn("label", col("y")).withColumn("w", col("w")),
-      BoostParams(numRound = 2, maxDepth = 2), 0.5, Some("w"))._1
+      p, Some("w"))._1
     val probe = org.apache.spark.ml.linalg.Vectors.dense(19.0, 0.0)
     assert(unw.predictOne(probe) != wtd.predictOne(probe),
       "100x weights must move the fitted trees")

@@ -6,10 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.ml._
 import graft.ml.GraftBoost._
 
-/** True single-model multi:softprob boosting ([[SoftprobBoost]]) —
-  * the mechanism-parity close of the reference's `core.py:580-590`:
-  * K trees per round on shared multinomial softmax gradients with
-  * Newton leaves (hessian-weighted least squares), vs. the OvR/RF
+/** True single-model multi:softprob boosting
+  * ([[SparseBoost.trainSoftprob]]) — the mechanism-parity close of the
+  * reference's `core.py:580-590`: K native trees per round on shared
+  * multinomial softmax gradients with Newton leaves, vs. the OvR/RF
   * capability-equivalents the engine also ships.
   */
 class SoftprobSpec extends AnyFunSuite {
@@ -24,8 +24,9 @@ class SoftprobSpec extends AnyFunSuite {
     val clf = new GraftXGBClassifier().setNEstimators(8).setMaxDepth(3)
       .setMulticlassStrategy("softprob")
     clf.fit(train, Seq("x1", "x2"), "label")
-    val sp = clf.model.get.model.asInstanceOf[SoftprobBoost.SoftprobModel]
-    assert(sp.trees.length == 8 && sp.trees.forall(_.length == 3),
+    val sp = clf.model.get.model.asInstanceOf[MultiSparse.MultiSparseModel]
+    assert(sp.trees.length == 8 * 3 &&
+      sp.treeInfo.sameElements(Array.tabulate(8 * 3)(_ % 3)),
       "forest must be rounds x classes")
     val hist = clf.model.get.evalsResult("train")("mlogloss")
     assert(hist.length == 8)

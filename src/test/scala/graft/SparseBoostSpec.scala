@@ -921,4 +921,41 @@ class SparseBoostSpec extends AnyFunSuite {
       if (r.getDouble(0) > 0) assert(p1 > 0.5) else assert(p1 < 0.5)
     }
   }
+
+  test("train restores the caller's job description") {
+    val sc = spark.sparkContext
+    val df = (0 until 40).map(i => ((i % 5).toDouble, (i % 2).toDouble))
+      .toDF("x", "y")
+    sc.setJobDescription("caller label")
+    try {
+      GraftBoost.train(df, Seq("x"), "y",
+        BoostParams("binary:logistic", numRound = 2, maxDepth = 2,
+          missing = Some(-999.0), missingStrategy = "native"))
+      assert(sc.getLocalProperty("spark.job.description") == "caller label",
+        "the fit's phase labels must not replace the caller's")
+    } finally sc.setJobDescription(null)
+  }
+
+  test("count:poisson, reg:quantileerror and softprob route missing values natively") {
+    // the marker rows carry the high-x outcome, so only a learned
+    // default branch (not imputation) sends them the right way
+    val df = (0 until 300).map { i =>
+      val x = (i % 10).toDouble
+      val hi = x >= 5 || i % 6 == 0
+      (if (i % 6 == 0) -999.0 else x, if (hi) 8.0 else 1.0, if (hi) 1.0 else 0.0)
+    }.toDF("x", "cnt", "cls")
+    def fit(label: String, p: BoostParams) = GraftBoost.train(df, Seq("x"), label,
+      p.copy(missing = Some(-999.0), missingStrategy = "native"))
+    val missing = Vectors.dense(-999.0)
+    val pois = fit("cnt", BoostParams("count:poisson", numRound = 10,
+      maxDepth = 2, eta = 0.5))
+    assert(GraftBoost.predictLocal(pois, missing) > 6.0)
+    val quant = fit("cnt", BoostParams("reg:quantileerror", numRound = 1,
+      maxDepth = 2, eta = 1.0, quantileAlpha = 0.3))
+    assert(GraftBoost.predictLocal(quant, missing) == 8.0)
+    val soft = fit("cls", BoostParams("multi:softprob", numRound = 5,
+      maxDepth = 2, multiclassStrategy = "softprob"))
+    assert(soft.model.isInstanceOf[MultiSparse.MultiSparseModel])
+    assert(GraftBoost.predictLocal(soft, missing) == 1.0)
+  }
 }

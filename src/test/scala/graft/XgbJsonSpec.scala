@@ -180,9 +180,9 @@ class XgbJsonSpec extends AnyFunSuite {
     val (m, df) = fitNative("reg:squarederror")
     df.unpersist()
     // pinball-loss forests have no schema slot (gbtree leaf values
-    // are Newton steps; the quantile loop's are leaf quantiles)
-    val q = m.copy(model = new graft.ml.QuantileBoost.QuantileModel(
-      "u", Array.empty, 0.0, 0.1, 0.5))
+    // are Newton steps; the quantile forest's are leaf quantiles)
+    val q = m.copy(model = new SparseBoost.SparseModel(
+      "u", Array.empty, 0.0, "reg:quantileerror", Array.empty))
     intercept[IllegalArgumentException] { XgbJson.export(q) }
     // multi-group gblinear (num_class > 1) has a different weights
     // layout — refused loudly rather than mis-sliced
@@ -209,7 +209,7 @@ class XgbJsonSpec extends AnyFunSuite {
 
   test("softprob: export -> import scores bit-identically via the native scorer") {
     val (m, df) = fitSoftprob()
-    val sp = m.model.asInstanceOf[graft.ml.SoftprobBoost.SoftprobModel]
+    val sp = m.model.asInstanceOf[graft.ml.MultiSparse.MultiSparseModel]
     val doc = XgbJson.export(m)
     assert(doc.contains("\"num_class\":\"3\""))
     assert(doc.contains("multi:softprob"))
@@ -722,7 +722,7 @@ class XgbJsonSpec extends AnyFunSuite {
       .cache()
     val m = GraftBoost.train(df, feats, "label",
       GraftBoost.BoostParams("count:poisson", numRound = 3, maxDepth = 3))
-    assert(m.model.isInstanceOf[graft.ml.PoissonBoost.PoissonModel])
+    assert(m.model.isInstanceOf[SparseBoost.SparseModel])
     val doc = XgbJson.export(m)
     assert(doc.contains("count:poisson"))
     val back = XgbJson.importModel(doc)
@@ -783,14 +783,14 @@ class XgbJsonSpec extends AnyFunSuite {
 
   test("multiclass truncate: iteration_range on an ingested document") {
     val (m, df) = fitSoftprob()
-    val sp = m.model.asInstanceOf[graft.ml.SoftprobBoost.SoftprobModel]
+    val sp = m.model.asInstanceOf[graft.ml.MultiSparse.MultiSparseModel]
     val mm = XgbJson.importModel(XgbJson.export(m))
       .model.asInstanceOf[graft.ml.MultiSparse.MultiSparseModel]
     val cut = mm.truncate(2)
     assert(cut.trees.length == 6 && cut.treeInfo.toSeq == (0 until 6).map(_ % 3))
     // the 2-round prefix scores bit-identically to the truncated
     // SOURCE forest (same per-class sum order)
-    val spCut = graft.ml.MultiSparse.fromSoftprob(sp.truncate(2))
+    val spCut = sp.truncate(2)
     import org.apache.spark.ml.linalg.Vectors
     Seq(Vectors.dense(10.0, 0.05, 0.02), Vectors.dense(45.0, 0.0, 0.08))
       .foreach { v =>
